@@ -23,14 +23,7 @@ object Sessions {
     */
   def local(cores: Int, shufflePartitions: Int = -1, appName: String = "graft",
       tmpfsShuffle: Boolean = false): SparkSession = {
-    // Shuffle-partition multiplier (default 1 → partitions = cores).
-    // Over-partitioning (e.g. ×4) + AQE coalescing balances skewed/
-    // straggling reduce tasks across cores; A/B knob for the merge loop.
-    val mult = sys.env.get("SPARK_GRAFT_SP_MULT").map(_.toInt).getOrElse(1)
-    val sp = if (shufflePartitions > 0) shufflePartitions else cores * mult
-    // SPARK_GRAFT_AQE=0 turns adaptive execution off — an A/B knob for
-    // measuring AQE's per-stage driver re-planning cost in the merge loop.
-    val aqe = !sys.env.get("SPARK_GRAFT_AQE").contains("0")
+    val sp = if (shufflePartitions > 0) shufflePartitions else cores
     val shm = new java.io.File("/dev/shm")
     // Headroom gate: only use tmpfs with ≥ 8 GiB usable — a bench-scale
     // shuffle is ≤ low GBs; anything tighter and ENOSPC beats the speedup.
@@ -42,7 +35,7 @@ object Sessions {
       .master(s"local[$cores]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", sp.toString)
-      .config("spark.sql.adaptive.enabled", aqe.toString)
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
@@ -53,6 +46,15 @@ object Sessions {
       // executor gets heartbeat-evicted and the session is dead.
       .config("spark.network.timeout", "600s")
       .config("spark.executor.heartbeatInterval", "60s")
+      // Fork-free local IO. Without libhadoop, Hadoop's local filesystem
+      // forks `chmod` for every file and directory it creates (see
+      // lake.LocalFs), and the default FileContext checkpoint manager forks
+      // `readlink` on every offset/commit log rename. The FileSystem-based
+      // manager goes through LocalFs instead; on file:// it is no less
+      // atomic (FileContext's local rename also checks, then renames).
+      .config("spark.hadoop.fs.file.impl", classOf[graft.lake.LocalFs].getName)
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
     localDir.foreach(d => b.config("spark.local.dir", d))
     val session = b.getOrCreate()
     // getOrCreate returns an existing default session WITHOUT binding it

@@ -143,10 +143,11 @@ object CdcStream {
         }
         Retry.run(cfg.retry, s"epoch $epochId observability") {
           if (stats.applied) {
-            emitMetrics(spark, table.root, wid, stats)
-            emitQc(spark, table.root, wid, stats)
-            emitLineage(spark, table.root, wid, stats,
-              sourceFilesOf(spark, checkpointDir, epochId))
+            val sources = sourceFilesOf(spark, checkpointDir, epochId)
+            concurrently(spark)(
+              () => emitMetrics(spark, table.root, wid, stats),
+              () => emitQc(spark, table.root, wid, stats),
+              () => emitLineage(spark, table.root, wid, stats, sources))
           } else {
             // Crash-window replay: the epoch's commit already applied but
             // the metrics/lineage writes may have been lost with the crash.
@@ -284,6 +285,42 @@ object CdcStream {
       }.toSeq
   }
 
+  /** Run the channel emits as concurrent Spark jobs. Each is a 1-row
+    * write whose wall time is mostly fixed job and commit latency, so the
+    * trigger waits for the slowest emit instead of the sum of all three.
+    * Every emit finishes before the first failure (in argument order) is
+    * rethrown, so a retry of the phase never races a straggler of the
+    * failed attempt. The threads are fresh per call: they inherit the
+    * trigger thread's Spark local properties (the stream's job group, the
+    * batch's SQL execution id) as a sequential emit would see them, and
+    * each binds the session (see the NPE note in MergeApply.applyBatch).
+    */
+  private def concurrently(spark: SparkSession)(emits: (() => Unit)*): Unit = {
+    val failures = new Array[Throwable](emits.size)
+    val threads = emits.zipWithIndex.map { case (emit, i) =>
+      val t = new Thread(() => {
+        SparkSession.setActiveSession(spark)
+        try emit() catch { case e: Throwable => failures(i) = e }
+      }, s"graft-emit-$i")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    try threads.foreach(_.join())
+    catch {
+      case e: InterruptedException =>
+        threads.foreach(_.interrupt())
+        throw e
+    }
+    failures.find(_ != null).foreach(e => throw e)
+  }
+
+  /** Test seam: called as each channel emit starts, with the table root,
+    * the channel (`_metrics`, `_qc`, `_lineage`) and the epoch. A hook
+    * that throws fails that emit.
+    */
+  @volatile private[graft] var emitHook: (String, String, Long) => Unit = (_, _, _) => ()
+
   /** One metrics row per applied (writer, epoch), written OVERWRITE into a
     * per-writer per-epoch directory — re-emission after a crash replaces
     * rather than duplicates. The WRITER scoping is load-bearing: epochIds
@@ -293,6 +330,7 @@ object CdcStream {
     */
   private def emitMetrics(spark: SparkSession, root: String, wid: String,
       s: BatchStats): Unit = {
+    emitHook(root, "_metrics", s.epochId)
     import spark.implicits._
     val eps = if (s.durationMs > 0) s.inputEvents * 1000.0 / s.durationMs else 0.0
     Seq((wid, s.epochId, s.snapshotId, s.inputEvents, s.dedupedKeys, s.touchedBuckets,
@@ -312,6 +350,7 @@ object CdcStream {
     */
   private def emitQc(spark: SparkSession, root: String, wid: String,
       s: BatchStats): Unit = {
+    emitHook(root, "_qc", s.epochId)
     import spark.implicits._
     val delRate = if (s.inputEvents > 0) s.qcDeletes.toDouble / s.inputEvents else 0.0
     val nullRate = if (s.observedLive > 0) s.qcNullText.toDouble / s.observedLive else 0.0
@@ -410,6 +449,7 @@ object CdcStream {
 
   private def emitLineage(spark: SparkSession, root: String, wid: String,
       s: BatchStats, sourceFiles: Seq[String]): Unit = {
+    emitHook(root, "_lineage", s.epochId)
     import spark.implicits._
     val rows = if (sourceFiles.isEmpty) Seq((wid, "<none>", s.epochId, s.snapshotId))
       else sourceFiles.map(f => (wid, f, s.epochId, s.snapshotId))

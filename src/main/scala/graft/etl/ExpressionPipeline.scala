@@ -146,7 +146,7 @@ object ExpressionPipeline {
     (0 until nGenes).foreach { i =>
       val vals = samples.indices.map { j =>
         val v = ((mix(mix(seed ^ i) ^ j) % 100000L + 100000L) % 100000L) / 100.0
-        f"$v%.2f"
+        "%.2f".formatLocal(java.util.Locale.ROOT, v) // '.' decimals under any host locale
       }
       sb ++= (s"GENE$i" +: vals).mkString("\t")
       sb += '\n'

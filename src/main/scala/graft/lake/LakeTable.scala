@@ -319,15 +319,19 @@ final class LakeTable(
     * row accounting and the commit instant (manifest mtime — the claim
     * instant, same clock [[expireSnapshots]]' age-based retention uses).
     * Driver-side metadata only, bounded by retention: expireSnapshots
-    * caps how many manifests exist, so this never scans data.
+    * caps how many manifests exist, so this never scans data. A snapshot
+    * whose manifest a concurrent expiry removes between the listing and
+    * the read is skipped: it is no longer retained.
     */
   def history: DataFrame = {
     import spark.implicits._
-    snapshotIds.map { id =>
-      val mtime = fs.getFileStatus(snapPath(id)).getModificationTime
-      val s = snapshot(id)
-      (s.id, s.parent, s.epochId, s.writerId, s.schemaVer, s.numBuckets,
-        s.rows, s.maxLsn, s.maint, s.files.size.toLong, new java.sql.Timestamp(mtime))
+    snapshotIds.flatMap { id =>
+      try {
+        val mtime = fs.getFileStatus(snapPath(id)).getModificationTime
+        val s = snapshot(id)
+        Some((s.id, s.parent, s.epochId, s.writerId, s.schemaVer, s.numBuckets,
+          s.rows, s.maxLsn, s.maint, s.files.size.toLong, new java.sql.Timestamp(mtime)))
+      } catch { case _: java.io.FileNotFoundException => None }
     }.toDF("snapshot_id", "parent_id", "epoch_id", "writer_id", "schema_ver",
       "num_buckets", "rows", "max_lsn", "is_maintenance", "num_files", "committed_at")
   }
@@ -1082,13 +1086,15 @@ final class LakeTable(
   /** All parquet data files under a commit directory as (file, bucket).
     *
     * On the LOCAL filesystem this walks with `java.io.File`: Hadoop's
-    * `RawLocalFileSystem` located-status listing forks a process per entry
-    * to load permissions (measured ~20 ms/file — 0.7 s per 64-bucket
-    * commit, serial driver time on the epoch critical path) where the
-    * plain walk is ~1 ms total. Permissions/block locations are never used
-    * here, so the fast path loses nothing; non-local schemes (hdfs://,
-    * s3a://) take the Hadoop listing, whose remote cost is one LIST round
-    * trip, not a fork per file.
+    * `RawLocalFileSystem` located-status listing forks an `ls` per entry
+    * to load permissions when libhadoop is absent (measured ~20 ms/file —
+    * 0.7 s per 64-bucket commit, serial driver time on the epoch critical
+    * path) where the plain walk is ~1 ms total. [[LocalFs]] removes only
+    * the `chmod` fork on create; the listing fork is still there, so the
+    * walk stays. Permissions/block locations are never used here, so the
+    * fast path loses nothing; non-local schemes (hdfs://, s3a://) take the
+    * Hadoop listing, whose remote cost is one LIST round trip, not a fork
+    * per file.
     */
   private def listDataFiles(dir: Path): Seq[(Path, Int)] = {
     val scheme = dir.toUri.getScheme
@@ -1380,8 +1386,9 @@ final class LakeTable(
     val live: Set[String] = keptSnaps.flatMap(_.files.map(_.path)).toSet
     val cutoff = System.currentTimeMillis() - orphanGraceMs
     // delete dead snapshot manifests (id-based: never younger than kept)
-    val deadSnaps = ids.filterNot(keep)
-    deadSnaps.foreach(id => fs.delete(snapPath(id), false))
+    // Every count below is of deletes that succeeded: `fs.delete` returns
+    // false when a concurrent expiry already took the path.
+    val snapsDeleted = ids.filterNot(keep).count(id => fs.delete(snapPath(id), false))
     // delete group manifests no kept snapshot references (expired
     // snapshots' groups + orphans from lost commit-claim races), unless
     // young enough to be an in-flight commit's pre-claim write
@@ -1391,7 +1398,7 @@ final class LakeTable(
         st.getPath.getName.endsWith(".json") &&
         !liveRefs.contains(st.getPath.getName) &&
         st.getModificationTime < cutoff)
-    deadRefs.foreach(st => fs.delete(st.getPath, false))
+    val refsDeleted = deadRefs.count(st => fs.delete(st.getPath, false))
     // delete orphan data files, same grace
     var dirsReclaimed = 0
     var filesDeleted = 0
@@ -1421,8 +1428,7 @@ final class LakeTable(
           }
         }
       }
-      dead.foreach(p => fs.delete(p, false))
-      filesDeleted = dead.size
+      filesDeleted = dead.count(p => fs.delete(p, false))
       // Reclaim EMPTIED commit directories: every writeDataFiles call
       // creates one c<ts>-<uuid> dir, so without this the data/ tree
       // grows by one dir per epoch forever and each expiry's recursive
@@ -1440,13 +1446,12 @@ final class LakeTable(
         catch { case _: java.io.FileNotFoundException => false }
       fs.listStatus(dataDir).foreach { st =>
         if (st.isDirectory && !liveCommitDirs.contains(st.getPath.getName) &&
-          st.getModificationTime < cutoff && !inFlight(st.getPath)) {
-          fs.delete(st.getPath, true)
+          st.getModificationTime < cutoff && !inFlight(st.getPath) &&
+          fs.delete(st.getPath, true))
           dirsReclaimed += 1
-        }
       }
     }
-    ExpiryReport(deadSnaps.size, deadRefs.length, filesDeleted, dirsReclaimed)
+    ExpiryReport(snapsDeleted, refsDeleted, filesDeleted, dirsReclaimed)
   }
 }
 

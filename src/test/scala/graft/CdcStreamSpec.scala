@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -292,6 +294,62 @@ class CdcStreamSpec extends AnyFunSuite {
     assert(m.filter($"epoch_id" === 1L).count() == 2L)
     assert(m.filter($"epoch_id" === 1L && $"writer_id".isNull).count() == 1L)
     assert(m.count() == 3L)
+  }
+
+  /** Rows per epoch in each observability channel. */
+  private def channelCounts(root: String): Map[String, Map[Long, Long]] =
+    Map("_metrics" -> CdcStream.metrics(spark, root), "_qc" -> CdcStream.qc(spark, root),
+      "_lineage" -> CdcStream.lineage(spark, root)).map { case (ch, df) =>
+      ch -> df.groupBy("epoch_id").count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+
+  test("concurrent channel emits: one _metrics, _qc and _lineage row per applied epoch") {
+    val base = tmp()
+    val cfg = GenConfig(numConvs = 15, maxTurns = 8, numEvents = 900)
+    writeEventFiles(cfg, s"$base/events", nFiles = 3)
+    val table = LakeTable.create(spark, s"$base/table", schemaVer = 1, numBuckets = 4)
+    CdcStream.runAvailable(spark, table, s"$base/events", s"$base/cp",
+      StreamConfig(maxFilesPerTrigger = 1))
+    assert(stateOf(table) == oracleOf(cfg))
+    val perEpoch = (0L until 3L).map(_ -> 1L).toMap
+    assert(channelCounts(table.root) == Map("_metrics" -> perEpoch, "_qc" -> perEpoch,
+      "_lineage" -> perEpoch))
+  }
+
+  test("a channel emit failing once surfaces through the phase retry, which re-emits all three") {
+    val base = tmp()
+    val cfg = GenConfig(numConvs = 15, maxTurns = 8, numEvents = 900)
+    writeEventFiles(cfg, s"$base/events", nFiles = 3)
+    val calls = new java.util.concurrent.ConcurrentHashMap[(String, Long), Int]()
+    def injectAt(root: String, ch: String, epoch: Long): Unit =
+      CdcStream.emitHook = (r, c, e) => if (r == root) {
+        val n = calls.merge((c, e), 1, _ + _)
+        if (c == ch && e == epoch && n == 1) throw new java.io.IOException(s"injected $c e$e")
+      }
+    try {
+      // retried: the _qc failure of epoch 1 fails the phase, all three re-run
+      val table = LakeTable.create(spark, s"$base/table", schemaVer = 1, numBuckets = 4)
+      injectAt(table.root, "_qc", 1L)
+      CdcStream.runAvailable(spark, table, s"$base/events", s"$base/cp",
+        StreamConfig(maxFilesPerTrigger = 1, retry = graft.cdc.RetryPolicy(backoffMs = 10L)))
+      val expectCalls = for (c <- Seq("_metrics", "_qc", "_lineage"); e <- 0L until 3L)
+        yield (c, e) -> (if (e == 1L) 2 else 1)
+      assert(calls.asScala.toMap == expectCalls.toMap)
+      val perEpoch = (0L until 3L).map(_ -> 1L).toMap
+      assert(channelCounts(table.root) == Map("_metrics" -> perEpoch, "_qc" -> perEpoch,
+        "_lineage" -> perEpoch))
+      assert(stateOf(table) == oracleOf(cfg))
+
+      // no retry budget: the emit thread's failure reaches the stream
+      val bare = LakeTable.create(spark, s"$base/bare", schemaVer = 1, numBuckets = 4)
+      calls.clear()
+      injectAt(bare.root, "_lineage", 0L)
+      val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        CdcStream.runAvailable(spark, bare, s"$base/events", s"$base/cp-bare",
+          StreamConfig(maxFilesPerTrigger = 1, retry = graft.cdc.RetryPolicy.none)))
+      assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .exists(_.getMessage == "injected _lineage e0"), err)
+    } finally CdcStream.emitHook = (_, _, _) => ()
   }
 
   test("A8 observe: merge metrics ride the write plan and match file stats") {

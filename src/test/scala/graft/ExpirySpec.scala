@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.hadoop.fs.{FileStatus, LocatedFileStatus, Path, RemoteIterator}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -106,11 +107,93 @@ class ExpirySpec extends AnyFunSuite {
     assert(table.read().count() == 20L)
   }
 
+  /** A second handle on `root` whose filesystem plays a concurrent expiry
+    * (see [[RacingExpiryFs]]). The conf is set only while the handle
+    * resolves its filesystem; the cache is bypassed so the session's own
+    * cached `file://` instance is untouched.
+    */
+  private def racingHandle(root: String): LakeTable = {
+    val keys = Seq("fs.file.impl" -> classOf[RacingExpiryFs].getName,
+      "fs.file.impl.disable.cache" -> "true")
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    try { val t = new LakeTable(spark, root); t.snapshotIds; t }
+    finally keys.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
+  test("history skips a snapshot whose manifest a concurrent expiry removed") {
+    val root = Files.createTempDirectory("graft-expiry-").toString
+    val table = LakeTable.create(spark, root, schemaVer = 2, numBuckets = 4)
+    (0L to 2L).foreach(commitBatch(table, _)) // snapshots 0..3
+    val racy = racingHandle(root)
+    RacingExpiryFs.victims = Set(f"$root/_meta/snap-${1L}%010d.json")
+    import spark.implicits._
+    val ids = racy.history.select("snapshot_id").as[Long].collect().sorted.toSeq
+    assert(ids == Seq(0L, 2L, 3L))
+  }
+
+  test("ExpiryReport counts deletes that succeeded, not attempts") {
+    val root = Files.createTempDirectory("graft-expiry-").toString
+    val table = LakeTable.create(spark, root, schemaVer = 2, numBuckets = 4)
+    (0L to 3L).foreach(commitBatch(table, _)) // snapshots 0..4, current = 4
+    def files(id: Long) = table.snapshot(id).files.map(f => new Path(f.path).toUri.getPath).toSet
+    val deadFiles = (0L to 3L).flatMap(files).toSet -- files(4L)
+    assert(deadFiles.nonEmpty)
+    val racy = racingHandle(root)
+    // the peer takes one dead manifest and one dead data file as soon as
+    // this pass has listed them
+    RacingExpiryFs.victims = Set(f"$root/_meta/snap-${1L}%010d.json", deadFiles.head)
+    val r = racy.expireSnapshots(keepLast = 1, orphanGraceMs = 0L)
+    assert(RacingExpiryFs.victims.isEmpty, "the racing peer never ran")
+    assert(r.snapshotsDeleted == 3, r.toString) // 4 dead: 0..3
+    assert(r.dataFilesDeleted == deadFiles.size - 1, r.toString)
+    assert(table.snapshotIds == Seq(4L))
+    assert(table.read().count() == 20L)
+  }
+
   test("negative olderThanMs preserves the count-based behavior exactly") {
     val root = Files.createTempDirectory("graft-expiry-").toString
     val table = LakeTable.create(spark, root, schemaVer = 2, numBuckets = 4)
     (0L to 3L).foreach(commitBatch(table, _))
     table.expireSnapshots(keepLast = 2, orphanGraceMs = 0L)
     assert(table.snapshotIds == Seq(3L, 4L))
+  }
+}
+
+/** A `file://` filesystem that plays a concurrent expiry: as soon as a
+  * listing returns one of the [[RacingExpiryFs.victims]], it deletes that
+  * file (and its checksum file), so the caller acts on a listing the peer
+  * has already invalidated.
+  */
+class RacingExpiryFs extends graft.lake.LocalFs {
+  override def listStatus(p: Path): Array[FileStatus] = {
+    val out = super.listStatus(p)
+    RacingExpiryFs.take(out.map(_.getPath).toSeq)
+    out
+  }
+  override def listLocatedStatus(p: Path): RemoteIterator[LocatedFileStatus] = {
+    val it = super.listLocatedStatus(p)
+    new RemoteIterator[LocatedFileStatus] {
+      def hasNext: Boolean = it.hasNext
+      def next(): LocatedFileStatus = {
+        val st = it.next()
+        RacingExpiryFs.take(Seq(st.getPath))
+        st
+      }
+    }
+  }
+}
+
+object RacingExpiryFs {
+  /** Local paths the peer deletes once a listing has returned them. */
+  @volatile var victims: Set[String] = Set.empty
+
+  def take(listed: Seq[Path]): Unit = synchronized {
+    val here = listed.map(_.toUri.getPath).filter(victims)
+    here.foreach { v =>
+      val f = new java.io.File(v)
+      assert(f.delete(), s"victim $v missing")
+      new java.io.File(f.getParent, s".${f.getName}.crc").delete()
+    }
+    victims --= here
   }
 }

@@ -43,6 +43,20 @@ class ExpressionPipelineSpec extends AnyFunSuite {
     assert(first.getAs[String]("study_accession_code") == "SRP049820")
   }
 
+  test("matrix fixture is locale-independent: '.' decimals under Locale.GERMANY") {
+    val prev = java.util.Locale.getDefault
+    def under(l: java.util.Locale): String =
+      try { java.util.Locale.setDefault(l); ExpressionPipeline.fixtureTsv() }
+      finally java.util.Locale.setDefault(prev)
+    val german = under(java.util.Locale.GERMANY)
+    val values = german.linesIterator.drop(1).flatMap(_.split("\t").drop(1)).toSeq
+    val bad = values.filterNot(_.matches("\\d+\\.\\d{2}"))
+    assert(values.nonEmpty && bad.isEmpty, bad.take(3))
+    // same bytes as under the root locale, so the S1/EP1/M5 fixtures (and
+    // their catalog hashes) do not depend on the host
+    assert(german == under(java.util.Locale.ROOT))
+  }
+
   // reference classifier golden table (test_enhanced_etl.py:104-171)
   test("illness classifier: rule table, case-insensitive, override beats regex") {
     import spark.implicits._
